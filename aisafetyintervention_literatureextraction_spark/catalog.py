@@ -435,6 +435,22 @@ class Catalog:
             )
         return dropped
 
+    def run_tags(self, name: str) -> tuple[set[str], DataFrame | None]:
+        """The run_ids tagged on the live entries, and a reader over the
+        entries that carry no tag (written untagged, or rewritten by
+        ``compact``) — None when every entry is tagged. Manifest-only
+        unless the caller reads the untagged rows."""
+        m = self._manifest(name)
+        tagged = {e["run_id"] for e in m["entries"] if e.get("run_id")}
+        untagged = [
+            os.path.join(self._table_dir(name), e["path"])
+            for e in m["entries"] if not e.get("run_id")
+        ]
+        if not untagged:
+            return tagged, None
+        return tagged, self.spark.read.schema(
+            StructType.fromJson(m["schema"])).parquet(*untagged)
+
     def rollback_orphan_versions(self, name: str, committed_run_ids: set[str]) -> int:
         """Undo whole overwrite/merge commits from runs that never
         reached their checkpoint commit point: walk _latest back past

@@ -13,6 +13,12 @@ Ours is the same primitive, set-oriented and per-stage:
   "per-partition lineage (conv_id ranges, stage watermarks)" the
   north rule names.
 - ``_ckpt_metrics``: one row per (stage, run_id, metric).
+
+Every entry a stage run writes — outputs, lineage, metrics, and last
+its state rows — carries the run's ``run_id``, and the state append is
+the commit point: ``reconcile`` prunes whatever an uncommitted run left
+in any of these tables, so the run record lands exactly once with the
+outputs it describes.
 """
 
 from __future__ import annotations
@@ -20,11 +26,12 @@ from __future__ import annotations
 import time
 import uuid
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .catalog import Catalog
-from .schemas import CKPT_METRICS
+from .schemas import CKPT_METRICS, CKPT_STAGE_STATE
 
 STATE = "_ckpt_stage_state"
 LINEAGE = "_ckpt_lineage"
@@ -71,34 +78,83 @@ def pending_files(catalog: Catalog, stage: str, files: DataFrame,
         key, "left_anti")
 
 
+def observed_count(obs: Observation) -> int:
+    """The ``n`` an Observation collected on the write that ran its
+    plan. Never blocks: observed metrics arrive synchronously with the
+    action, so an Observation still pending afterwards belongs to a
+    plan no job executed, which wrote no rows."""
+    if obs._jo is None or not obs._jo.future().isCompleted():
+        return 0
+    return int(obs.get["n"] or 0)
+
+
+def counted(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with a row-count Observation attached: write the returned
+    frame, then read the count with :func:`observed_count` — the count
+    rides on the write job instead of a job of its own."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("n")), obs
+
+
+def literal_rows(spark, rows: list[tuple], schema: StructType) -> DataFrame:
+    """A few literal rows built inside the JVM: ``createDataFrame`` on
+    a Python list sends them through a Python worker. One row per
+    partition, as ``createDataFrame`` slices a short list, so each row
+    lands in its own file exactly as before."""
+    structs = F.array(*[
+        F.struct(*[F.lit(v).cast(f.dataType).alias(f.name)
+                   for v, f in zip(r, schema.fields)])
+        for r in rows
+    ])
+    n = len(rows)
+    return spark.range(0, n, 1, n).select(
+        F.element_at(structs, (F.col("id") + 1).cast("int")).alias("r")
+    ).select("r.*")
+
+
 def mark_processed(
-    catalog: Catalog, stage: str, run_id: str, conv_ids: DataFrame, key: str = "conv_id"
+    catalog: Catalog, stage: str, run_id: str, conv_ids: DataFrame | None = None,
+    key: str = "conv_id",
 ) -> None:
-    """The COMMIT POINT of a stage run: a run's output-table entries
-    are considered committed iff its run_id appears in the state table
-    (see ``reconcile``) — so this must be the LAST catalog write of
-    the stage's exactly-once window."""
-    rows = conv_ids.select(
-        F.lit(stage).alias("stage"),
-        F.col(key).cast("string").alias("conv_id"),
-        F.lit(run_id).alias("run_id"),
-    )
-    catalog.append(rows, STATE)
+    """The COMMIT POINT of a stage run: a run's entries in its output
+    and run-record tables are committed iff its run_id appears in the
+    state table (see ``reconcile``) — so this must be the LAST catalog
+    write of the stage's exactly-once window. ``conv_ids=None`` marks
+    a whole-table recompute with the single sentinel row ``__all__``.
+    The state entry itself is tagged with the run_id, so the committed
+    set is read from commit metadata, not from the rows."""
+    if conv_ids is None:
+        rows = literal_rows(catalog.spark, [(stage, "__all__", run_id)], CKPT_STAGE_STATE)
+    else:
+        rows = conv_ids.select(
+            F.lit(stage).alias("stage"),
+            F.col(key).cast("string").alias("conv_id"),
+            F.lit(run_id).alias("run_id"),
+        )
+    catalog.append(rows, STATE, run_id=run_id)
 
 
 def committed_run_ids(catalog: Catalog) -> set[str]:
-    """run_ids whose stage reached its mark_processed commit point."""
+    """run_ids whose stage reached its mark_processed commit point:
+    the run_id tags of the state table's entries, plus — only when
+    some entries carry no tag (written before tagging, or rewritten by
+    compaction) — the run_ids stored in those entries' rows."""
     if not catalog.exists(STATE):
         return set()
-    return {r[0] for r in catalog.read(STATE).select("run_id").distinct().collect()}
+    tagged, untagged = catalog.run_tags(STATE)
+    if untagged is not None:
+        tagged |= {r[0] for r in untagged.select("run_id").distinct().collect()}
+    return tagged
 
 
 def reconcile_versions(catalog: Catalog, output_tables: list[str]) -> dict[str, int]:
     """Overwrite/merge-table twin of ``reconcile``: roll whole table
     VERSIONS back past uncommitted runs (stage C's read-merge-overwrite
     cycle must undo atomically, or a resumed run would merge its delta
-    into a state that already contains it — double-counting)."""
+    into a state that already contains it — double-counting). Orphan
+    run-record entries are pruned as in ``reconcile``."""
     committed = committed_run_ids(catalog)
+    _prune_record(catalog, committed)
     return {
         t: catalog.rollback_orphan_versions(t, committed)
         for t in output_tables
@@ -110,8 +166,10 @@ def reconcile(catalog: Catalog, output_tables: list[str]) -> dict[str, int]:
     """Heal a crash between an output-table commit and its stage-state
     commit: drop orphaned manifest entries (runs that never reached
     mark_processed), so resume reprocesses their conv_ids exactly once
-    instead of duplicating rows. O(manifests), zero data IO."""
+    instead of duplicating rows. The run record (lineage, metrics) is
+    pruned the same way. O(manifests), zero data IO."""
     committed = committed_run_ids(catalog)
+    _prune_record(catalog, committed)
     return {
         t: catalog.prune_orphan_runs(t, committed)
         for t in output_tables
@@ -119,12 +177,18 @@ def reconcile(catalog: Catalog, output_tables: list[str]) -> dict[str, int]:
     }
 
 
+def _prune_record(catalog: Catalog, committed: set[str]) -> None:
+    for t in (LINEAGE, METRICS):
+        if catalog.exists(t):
+            catalog.prune_orphan_runs(t, committed)
+
+
 def write_lineage(
     catalog: Catalog, stage: str, run_id: str, df: DataFrame, key: str = "conv_id"
 ) -> None:
     """Per-partition lineage: conv_id range + row count per shuffle
     partition of the stage output (computed distributed, not collected
-    row-wise)."""
+    row-wise). Written before the stage's commit point."""
     lin = (
         df.withColumn("partition_id", F.spark_partition_id())
         .groupBy("partition_id")
@@ -140,14 +204,15 @@ def write_lineage(
             "conv_id_min", "conv_id_max", "n_rows",
         )
     )
-    catalog.append(lin, LINEAGE)
+    catalog.append(lin, LINEAGE, run_id=run_id)
 
 
 def write_metrics(catalog: Catalog, stage: str, run_id: str, metrics: dict) -> None:
-    spark = catalog.spark
+    """One row per metric, tagged with the run_id and written before
+    the stage's commit point (pruned with the run if it never
+    commits)."""
     rows = [
-        {"stage": stage, "run_id": run_id, "metric": k, "value": str(v)}
+        (stage, run_id, k, str(v))
         for k, v in {**metrics, "wall_ts": time.time()}.items()
     ]
-    df = spark.createDataFrame(rows, schema=CKPT_METRICS)
-    catalog.append(df, METRICS)
+    catalog.append(literal_rows(catalog.spark, rows, CKPT_METRICS), METRICS, run_id=run_id)

@@ -23,7 +23,10 @@ def stable_node_id(ntype: Column | str, name: Column | str) -> Column:
 def minhash_signature(tokens: Column, num_hashes: int = 32) -> Column:
     """MinHash signature: for seed s, min over tokens of
     xxhash64(s, token). Pure column expr — one pass over the token
-    array per seed, all inside codegen."""
+    array per seed, no Python. The ``transform`` lambdas are evaluated
+    interpreted (higher-order functions are CodegenFallback), so the
+    cost grows with seeds × tokens: fine for stage C's few name
+    tokens, not for document shingles (see the Arrow variants below)."""
     return F.transform(
         F.sequence(F.lit(0), F.lit(num_hashes - 1)),
         lambda s: F.array_min(F.transform(tokens, lambda t: F.xxhash64(s, t))),

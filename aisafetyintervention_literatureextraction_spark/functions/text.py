@@ -70,7 +70,8 @@ def char_shingles(col: Column | str, k: int = 3) -> Column:
     """Character k-shingle set of a string (MinHash/Jaccard input).
 
     Built-ins only: sequence over offsets → substring per offset →
-    distinct. Stays codegen'd; no Python.
+    distinct. No Python; the ``transform`` lambda runs interpreted
+    (higher-order functions are CodegenFallback), once per offset.
     """
     c = F.col(col) if isinstance(col, str) else col
     c = F.lower(c)

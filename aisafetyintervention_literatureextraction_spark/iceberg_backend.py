@@ -356,6 +356,30 @@ class IcebergCatalog:
     def _run_id_of(self, snap: dict) -> str | None:
         return (snap.get("summary") or {}).get("run_id")
 
+    def run_tags(self, name: str) -> tuple[set[str], DataFrame | None]:
+        """The run_ids on the snapshot summaries of the table's current
+        ancestry, and — when those cannot account for every row (a
+        data-adding snapshot without a run_id, or history cut short by
+        ``expire_snapshots``) — the whole table to read them from
+        instead; None otherwise."""
+        fq = self._fq(name)
+        snaps = [
+            r.asDict() for r in self.spark.sql(
+                f"SELECT s.snapshot_id, s.parent_id, s.operation, s.summary "
+                f"FROM {fq}.snapshots s JOIN {fq}.history h "
+                f"ON s.snapshot_id = h.snapshot_id WHERE h.is_current_ancestor"
+            ).collect()
+        ]
+        ids = {s["snapshot_id"] for s in snaps}
+        tagged = {self._run_id_of(s) for s in snaps} - {None}
+        complete = all(
+            s["parent_id"] is None or s["parent_id"] in ids for s in snaps
+        ) and all(
+            self._run_id_of(s) is not None
+            for s in snaps if s["operation"] in ("append", "overwrite")
+        )
+        return tagged, None if complete else self.read(name)
+
     def rollback_orphan_versions(self, name: str, committed_run_ids: set[str]) -> int:
         """Walk the snapshot history back past uncommitted-run
         snapshots via ``rollback_to_snapshot`` (pointer-only, data

@@ -13,11 +13,13 @@ deterministic, sub-quadratic pipeline per the north rule:
    candidate pair ⇔ two nodes share ≥1 band bucket. This is a
    self-join on (band, bucket) — shuffle on the bucket key only,
    never O(n²).
-4. **exact Jaccard filter + TF-IDF cosine re-rank** — exact set
-   Jaccard from the token arrays already carried with the pair;
-   TF-IDF cosine computed *relationally* (explode tokens → join IDF
-   weights → sparse dot product via groupBy-sum) — the C5 analog of
-   the reference's `similarity = 1 - distance` (merge.py:102).
+4. **exact Jaccard filter + TF-IDF cosine re-rank** — one node-level
+   feature relation (token set, token → IDF map, vector norm) attaches
+   to both sides of each deduplicated candidate pair; exact set
+   Jaccard and the TF-IDF cosine (binary TF, so the dot product is
+   Σ idf² over the shared tokens) are then one projection — the C5
+   analog of the reference's `similarity = 1 - distance`
+   (merge.py:102).
 5. threshold → similarity edges for connected components (G5).
 
 Skew/scale notes: bucket hot spots (a band value shared by k nodes)
@@ -28,7 +30,7 @@ nodes); AQE skew-join handles the rest.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.caching import track
@@ -135,6 +137,35 @@ def bucket_join_pairs(
     )
 
 
+def node_features(nodes: DataFrame) -> DataFrame:
+    """(node_id, type, tokens, w, norm): one row per node with a
+    non-empty match token set. ``w`` maps each token to its corpus IDF
+    ``log((n_docs + 1) / (df + 1)) + 1`` and ``norm`` is the length of
+    the node's TF-IDF vector (TF is binary: tokens are a set, so a
+    weight is its token's IDF). ``n_docs`` counts every supplied node,
+    tokenless ones included, as an aggregate inside the plan, so
+    building the relation runs no job of its own."""
+    toks = _feature_tokens(nodes).select(
+        "node_id", "type", F.explode("tokens").alias("token")
+    )
+    n_docs = nodes.agg(F.count(F.lit(1)).cast("double").alias("n_docs"))
+    # document frequency as a window over the token partition: one
+    # exchange, no token-level aggregate joined back
+    df = F.count(F.lit(1)).over(Window.partitionBy("token"))
+    weighted = toks.withColumn("df", df).crossJoin(F.broadcast(n_docs)).select(
+        "node_id", "type", "token",
+        (F.log((F.col("n_docs") + 1.0) / (F.col("df") + 1.0)) + 1.0).alias("idf"),
+    )
+    return (
+        weighted.groupBy("node_id", "type")
+        .agg(
+            F.map_from_entries(F.collect_list(F.struct("token", "idf"))).alias("w"),
+            F.sqrt(F.sum(F.col("idf") ** 2)).alias("norm"),
+        )
+        .select("node_id", "type", F.map_keys("w").alias("tokens"), "w", "norm")
+    )
+
+
 def verify_pairs(
     cand: DataFrame,
     nodes: DataFrame,
@@ -142,39 +173,42 @@ def verify_pairs(
     cosine_threshold: float = 0.7,
     same_type_only: bool = True,
 ) -> DataFrame:
-    """Exact Jaccard + relational TF-IDF cosine verification of
-    candidate (a_id, b_id) pairs → (a_id, b_id, similarity) merge
-    edges. Token arrays attach AFTER candidate dedup (narrow-join
-    pattern); IDF weights come from the supplied candidate-node set."""
-    feats = _feature_tokens(nodes).select("node_id", "tokens")
-    pairs = (
-        cand.join(
-            feats.select(F.col("node_id").alias("a_id"), F.col("tokens").alias("a_tokens")),
-            "a_id",
+    """Score deduplicated candidate (a_id, b_id) pairs → (a_id, b_id,
+    similarity) merge edges. The node feature relation attaches AFTER
+    candidate dedup (narrow-join pattern), once per side; exact set
+    Jaccard, TF-IDF cosine (Σ idf² over the shared tokens ÷ both
+    norms) and the type filter are then one projection. IDF comes
+    from the supplied candidate-node set."""
+    feats = node_features(nodes)
+
+    def side(p: str) -> DataFrame:
+        return feats.select(
+            F.col("node_id").alias(f"{p}_id"), F.col("type").alias(f"{p}_type"),
+            F.col("tokens").alias(f"{p}_tokens"), F.col("w").alias(f"{p}_w"),
+            F.col("norm").alias(f"{p}_norm"),
         )
-        .join(
-            feats.select(F.col("node_id").alias("b_id"), F.col("tokens").alias("b_tokens")),
-            "b_id",
-        )
-        .select("a_id", "b_id", "a_tokens", "b_tokens")
+
+    shared = F.array_intersect("a_tokens", "b_tokens")
+    union = F.size(F.array_union("a_tokens", "b_tokens"))
+    dot = F.aggregate(
+        shared, F.lit(0.0), lambda acc, t: acc + F.col("a_w")[t] * F.col("b_w")[t]
     )
-    pairs = tfidf_cosine(scored_pairs(pairs), nodes)
+    keep = (F.col("jaccard") >= jaccard_threshold) & (F.col("cosine") >= cosine_threshold)
     if same_type_only:
-        types = nodes.select("node_id", "type")
-        pairs = (
-            pairs.join(types.withColumnRenamed("node_id", "a_id")
-                       .withColumnRenamed("type", "a_type"), "a_id")
-            .join(types.withColumnRenamed("node_id", "b_id")
-                  .withColumnRenamed("type", "b_type"), "b_id")
-            .filter(F.col("a_type") == F.col("b_type"))
-            .drop("a_type", "b_type")
+        keep = keep & (F.col("a_type") == F.col("b_type"))
+    return (
+        cand.join(side("a"), "a_id")
+        .join(side("b"), "b_id")
+        .select(
+            "a_id", "b_id", "a_type", "b_type",
+            (F.size(shared) / F.greatest(union, F.lit(1))).cast("double").alias("jaccard"),
+            (dot / (F.col("a_norm") * F.col("b_norm"))).alias("cosine"),
         )
-    return pairs.filter(
-        (F.col("jaccard") >= jaccard_threshold)
-        & (F.col("cosine") >= cosine_threshold)
-    ).select(
-        "a_id", "b_id",
-        F.greatest(F.col("jaccard"), F.col("cosine")).alias("similarity"),
+        .filter(keep)
+        .select(
+            "a_id", "b_id",
+            F.greatest(F.col("jaccard"), F.col("cosine")).alias("similarity"),
+        )
     )
 
 
@@ -205,116 +239,6 @@ def merge_candidate_nodes(old: DataFrame, delta: DataFrame) -> DataFrame:
             F.col("p.intervention_maturity").alias("intervention_maturity"),
             "n_occurrences", "conv_ids",
         )
-    )
-
-
-def lsh_candidate_pairs(
-    nodes: DataFrame,
-    num_hashes: int = 32,
-    bands: int = 16,
-    max_bucket_size: int = 64,
-) -> DataFrame:
-    """Banded-MinHash self-join → candidate (a_id, b_id) pairs with
-    token arrays attached. O(4) canonical pair form via least/greatest
-    (merge.py:88) + per-pair dedup (A4)."""
-    rows = num_hashes // bands
-    # persist the tokenized features: they feed the signature job, the
-    # bucket-size job, and the two token re-attach joins below
-    feats = track(_feature_tokens(nodes).select("node_id", "tokens"))
-    sig = feats.withColumn("sig", minhash_signature(F.col("tokens"), num_hashes))
-    # bucketed rows are NARROW (ids only): the pre-dedup candidate set
-    # can be orders of magnitude larger than the surviving pairs, so
-    # token arrays are attached AFTER dedup, not dragged through the
-    # self-join shuffle (measured 33 s → ~7 s at 120k nodes)
-    bucketed = sig.select(
-        "node_id",
-        F.explode(lsh_bands(F.col("sig"), bands, rows)).alias("bb"),
-    ).select("node_id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-    bucketed = track(bucketed)
-
-    # drop degenerate hot buckets before the self-join (skew control)
-    bucket_sizes = bucketed.groupBy("band", "bucket").agg(F.count("*").alias("bsz"))
-    bucketed = bucketed.join(
-        F.broadcast(bucket_sizes.filter(F.col("bsz") > max_bucket_size)),
-        ["band", "bucket"],
-        "left_anti",
-    )
-
-    a = bucketed.select("band", "bucket", F.col("node_id").alias("a_id"))
-    b = bucketed.select("band", "bucket", F.col("node_id").alias("b_id"))
-    cand = (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("a_id") < F.col("b_id"))  # F7 self-filter + O4 canonical
-        .select("a_id", "b_id")
-        .dropDuplicates(["a_id", "b_id"])       # A4: one row per pair
-    )
-    pairs = (
-        cand.join(
-            feats.select(F.col("node_id").alias("a_id"), F.col("tokens").alias("a_tokens")),
-            "a_id",
-        )
-        .join(
-            feats.select(F.col("node_id").alias("b_id"), F.col("tokens").alias("b_tokens")),
-            "b_id",
-        )
-        .select("a_id", "b_id", "a_tokens", "b_tokens")
-    )
-    return pairs
-
-
-def scored_pairs(pairs: DataFrame) -> DataFrame:
-    """Exact Jaccard on the carried token sets (re-rank of the LSH
-    approximation; C5 similarity)."""
-    inter = F.size(F.array_intersect(F.col("a_tokens"), F.col("b_tokens")))
-    union = F.size(F.array_union(F.col("a_tokens"), F.col("b_tokens")))
-    return pairs.withColumn(
-        "jaccard", (inter / F.greatest(union, F.lit(1))).cast("double")
-    )
-
-
-def tfidf_cosine(pairs: DataFrame, nodes: DataFrame) -> DataFrame:
-    """Relational sparse TF-IDF cosine for candidate pairs.
-
-    IDF from document frequency over candidate nodes; each node is a
-    sparse unit vector over its tokens; pair cosine = Σ w_a·w_b /
-    (|a||b|) computed by exploding pair tokens and joining the
-    (node, token, weight) table — a groupBy-sum, no UDF, no O(n²).
-    """
-    toks = (
-        _feature_tokens(nodes)
-        .select("node_id", F.explode("tokens").alias("token"))
-        .distinct()
-    )
-    n_docs = nodes.count()
-    idf = toks.groupBy("token").agg(F.count("*").alias("df")).withColumn(
-        "idf", F.log((F.lit(float(n_docs)) + 1.0) / (F.col("df") + 1.0)) + 1.0
-    )
-    w = toks.join(F.broadcast(idf), "token").select(
-        "node_id", "token", F.col("idf").alias("w")
-    )
-    norms = w.groupBy("node_id").agg(F.sqrt(F.sum(F.col("w") ** 2)).alias("norm"))
-
-    pair_keys = pairs.select("a_id", "b_id")
-    dots = (
-        pair_keys.join(w.alias("wa"), F.col("a_id") == F.col("wa.node_id"))
-        .join(
-            w.alias("wb"),
-            (F.col("b_id") == F.col("wb.node_id"))
-            & (F.col("wa.token") == F.col("wb.token")),
-        )
-        .groupBy("a_id", "b_id")
-        .agg(F.sum(F.col("wa.w") * F.col("wb.w")).alias("dot"))
-    )
-    return (
-        pairs.join(dots, ["a_id", "b_id"], "left")
-        .join(norms.withColumnRenamed("node_id", "a_id").withColumnRenamed("norm", "a_norm"), "a_id")
-        .join(norms.withColumnRenamed("node_id", "b_id").withColumnRenamed("norm", "b_norm"), "b_id")
-        .withColumn(
-            "cosine",
-            F.coalesce(F.col("dot"), F.lit(0.0))
-            / (F.col("a_norm") * F.col("b_norm")),
-        )
-        .drop("dot", "a_norm", "b_norm")
     )
 
 
@@ -373,14 +297,15 @@ def similarity_edges(
     spurious candidate scores 0.6/0.48 — the AND separates them with
     margin on both axes.
 
-    The candidate-node aggregation is persisted here: five downstream
-    jobs (signatures, bucket sizing, IDF doc-count, norms, type
-    filter) would otherwise each recompute the groupBy over the full
-    nodes_raw table. The caller owns unpersisting (it is also the
-    returned DataFrame). Measured at 4.2M turns / 120k distinct
-    nodes (16 cores): whole stage ~21 s (narrow-join LSH + TF-IDF
-    re-rank + CC) — all node-scale, so stage C stays
-    O(distinct nodes), not O(turns), as the corpus grows.
+    The candidate-node aggregation is persisted here: its consumers
+    (signatures, the node feature relation and its doc count, alias
+    edges, the candidate_nodes write) would otherwise each recompute
+    the groupBy over the full nodes_raw table. The caller owns
+    unpersisting (it is also the returned DataFrame). Measured at
+    4.2M turns / 120k distinct nodes (16 cores): whole stage ~21 s
+    (narrow-join LSH + TF-IDF re-rank + CC) — all node-scale, so
+    stage C stays O(distinct nodes), not O(turns), as the corpus
+    grows.
     """
     nodes = track(with_node_text(candidate_nodes(nodes_raw)))
     edges = edges_from_candidates(

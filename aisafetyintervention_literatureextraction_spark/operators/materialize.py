@@ -25,6 +25,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.caching import track
 from ..functions.hashing import stable_node_id
 from ..functions.text import snake_case
 
@@ -149,6 +150,9 @@ def materialize_from_agg(
             "obj_key", "left",
         )
     )
+    # three consumers (dangling, implicit nodes, kg_edges) each write a
+    # table: pin the resolved relation so the name joins run once
+    t = track(t)
     # implicit nodes for unresolved endpoints (MERGE-creates-missing)
     dangling = (
         t.filter(F.col("subj_id").isNull() | F.col("obj_id").isNull())

@@ -53,6 +53,7 @@ def reassemble(
     salt_segment: int = 4096,
     salted: bool = True,
     allow_gaps: bool = False,
+    pin=None,
 ) -> ReassemblyResult:
     """transcripts → (documents, quarantine).
 
@@ -66,6 +67,11 @@ def reassemble(
     strict contract (gap ⇒ quarantine, reason ``turn_index_gap``);
     True assembles the present turns in order and only conflicting
     duplicates quarantine.
+
+    ``pin``: optional ``DataFrame → DataFrame`` (e.g.
+    ``caching.track``) applied to the assembled per-conversation
+    relation both outputs filter, so a caller that writes both runs
+    the reassembly once; by default nothing is pinned.
     """
     t = transcripts.select("conv_id", "turn_idx", "role", "text", "tool", "ts")
 
@@ -127,6 +133,8 @@ def reassemble(
             | (F.col("idx_max") != F.col("n_turns") - 1)
         ),
     )
+    if pin is not None:
+        checked = pin(checked)
 
     quarantine = (
         checked.filter(F.col("has_conflict") | F.col("has_gap"))

@@ -66,6 +66,8 @@ def ingest_extraction_json(
     nodes = ckpt.pending(catalog, stage, nodes) if resume else nodes
 
     t_ok, t_bad = validate_triples(triples)
+    t_ok, n_ok_obs = ckpt.counted(t_ok)
+    t_bad, n_bad_obs = ckpt.counted(t_bad)
     catalog.append(t_ok, "triples_raw", run_id=run_id)
     catalog.append(t_bad, "quarantine_triples", run_id=run_id)
     if variant == "a":
@@ -81,11 +83,11 @@ def ingest_extraction_json(
     processed = (
         triples.select("conv_id").union(nodes.select("conv_id")).distinct()
     )
-    ckpt.mark_processed(catalog, stage, run_id, processed)  # commit point
     stats = {
-        "n_triples_ok": t_ok.count(),
-        "n_triples_quarantined": t_bad.count(),
+        "n_triples_ok": ckpt.observed_count(n_ok_obs),
+        "n_triples_quarantined": ckpt.observed_count(n_bad_obs),
         "wall_s": time.time() - t0,
     }
     ckpt.write_metrics(catalog, stage, run_id, stats)
+    ckpt.mark_processed(catalog, stage, run_id, processed)  # commit point
     return stats

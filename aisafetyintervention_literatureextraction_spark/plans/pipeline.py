@@ -63,6 +63,19 @@ class PipelineConfig:
     analytics_weighted: bool = False       # stage E PageRank: evidence weights
 
 
+def _commit(cat: Catalog, stage: str, run_id: str, processed: DataFrame | None,
+            metrics: dict, record: dict | None = None) -> None:
+    """Close a stage's exactly-once window: its metrics land tagged
+    with the run_id, then the state rows — the commit point. A crash
+    between the two leaves orphan metrics that ``reconcile`` prunes.
+    ``record`` (when given) receives the metrics under the stage name,
+    so a runner reports them without reading the table back."""
+    ckpt.write_metrics(cat, stage, run_id, metrics)
+    ckpt.mark_processed(cat, stage, run_id, processed)  # commit point
+    if record is not None:
+        record[stage] = metrics
+
+
 def stage_a_reassemble(cat: Catalog, transcripts: DataFrame, cfg: PipelineConfig) -> DataFrame:
     run_id = ckpt.new_run_id()
     t0 = time.time()
@@ -71,27 +84,27 @@ def stage_a_reassemble(cat: Catalog, transcripts: DataFrame, cfg: PipelineConfig
         # (manifest-level, O(entries)) before computing the pending set
         ckpt.reconcile(cat, ["documents", "quarantine"])
     inp = ckpt.pending(cat, "A_reassemble", transcripts) if cfg.resume else transcripts
-    res = reassemble(inp, salt_segment=cfg.salt_segment, allow_gaps=cfg.allow_gaps)
-    # both deltas are multi-consumer (append + mark + lineage/metrics):
-    # persist so reassembly runs once, and keep every per-run artifact
-    # O(delta) — lineage/metrics over the whole table would silently
-    # reintroduce the O(history)-per-run scan the catalog just removed
-    docs = caching.track(res.documents)
-    quarantine = caching.track(res.quarantine)
+    # documents and quarantine are two filters of one assembled
+    # relation, each consumed by an append, the processed set and the
+    # lineage: pin it so the reassembly runs once (released with the
+    # run's caches), and keep every per-run artifact O(delta) —
+    # lineage/metrics over the whole table would silently reintroduce
+    # the O(history)-per-run scan the catalog just removed
+    res = reassemble(inp, salt_segment=cfg.salt_segment, allow_gaps=cfg.allow_gaps,
+                     pin=caching.track)
+    docs, n_docs = ckpt.counted(res.documents)
     cat.append(docs, "documents", run_id=run_id)
     # unconditional append: an empty delta writes an empty entry —
     # cheaper than the limit(1).count() existence probe job that used
     # to gate this (r3 VERDICT nit), and the table existing (possibly
     # empty) is the steady state anyway
-    cat.append(quarantine, "quarantine", run_id=run_id)
-    processed = docs.select("conv_id").union(quarantine.select("conv_id")).distinct()
-    ckpt.mark_processed(cat, "A_reassemble", run_id, processed)  # commit point
-    ckpt.write_lineage(cat, "A_reassemble", run_id, docs)
-    ckpt.write_metrics(cat, "A_reassemble", run_id, {
-        "n_documents_delta": docs.count(), "wall_s": time.time() - t0,
+    cat.append(res.quarantine, "quarantine", run_id=run_id)
+    ckpt.write_lineage(cat, "A_reassemble", run_id, res.documents)
+    processed = (res.documents.select("conv_id")
+                 .union(res.quarantine.select("conv_id")).distinct())
+    _commit(cat, "A_reassemble", run_id, processed, {
+        "n_documents_delta": ckpt.observed_count(n_docs), "wall_s": time.time() - t0,
     })
-    docs.unpersist()
-    quarantine.unpersist()
     return cat.read("documents")
 
 
@@ -158,20 +171,21 @@ def stage_a_ingest_documents(
             "conv_id", F.col("__reason").alias("reason")
         )
     )
-    cat.append(good, "documents", run_id=run_id)
+    good_out, n_good = ckpt.counted(good)
+    cat.append(good_out, "documents", run_id=run_id)
     cat.append(bad, "quarantine", run_id=run_id)  # empty delta is fine
-    processed = good.select("conv_id").union(bad.select("conv_id")).distinct()
-    ckpt.mark_processed(cat, "A_reassemble", run_id, processed)  # commit point
     ckpt.write_lineage(cat, "A_reassemble", run_id, good)
-    ckpt.write_metrics(cat, "A_reassemble", run_id, {
-        "n_documents_delta": good.count(), "wall_s": time.time() - t0,
+    processed = good.select("conv_id").union(bad.select("conv_id")).distinct()
+    _commit(cat, "A_reassemble", run_id, processed, {
+        "n_documents_delta": ckpt.observed_count(n_good), "wall_s": time.time() - t0,
     })
     good.unpersist()
     bad.unpersist()
     return cat.read("documents")
 
 
-def stage_b_extract(cat: Catalog, cfg: PipelineConfig) -> tuple[DataFrame, DataFrame]:
+def stage_b_extract(cat: Catalog, cfg: PipelineConfig,
+                    record: dict | None = None) -> tuple[DataFrame, DataFrame]:
     run_id = ckpt.new_run_id()
     t0 = time.time()
     if cfg.resume:
@@ -201,7 +215,8 @@ def stage_b_extract(cat: Catalog, cfg: PipelineConfig) -> tuple[DataFrame, DataF
     nodes = caching.track(extract_nodes(pending_docs, engine=cfg.extract_engine))
     t_ok, t_bad = validate_triples(triples)
     n_ok, n_bad = validate_nodes(nodes)
-    cat.append(t_ok, "triples_raw", run_id=run_id)
+    t_out, n_triples = ckpt.counted(t_ok)
+    cat.append(t_out, "triples_raw", run_id=run_id)
     cat.append(n_ok, "nodes_raw", run_id=run_id)
     cat.append(t_bad, "quarantine_triples", run_id=run_id)   # F9 routed,
     cat.append(n_bad, "quarantine_nodes", run_id=run_id)     # not raised
@@ -212,16 +227,15 @@ def stage_b_extract(cat: Catalog, cfg: PipelineConfig) -> tuple[DataFrame, DataF
         aggregate_raw_edges(t_ok), "edges_agg",
         keys=["subj", "pred", "obj"], combiner=edge_agg_combiner, run_id=run_id,
     )
-    ckpt.mark_processed(cat, "B_extract", run_id, pending_docs.select("conv_id"))  # commit point
     # lineage/metrics describe THIS run's delta (O(delta), and the
     # per-partition conv_id ranges of the run's output are the useful
     # lineage rows anyway — the full table's ranges are their union)
     ckpt.write_lineage(cat, "B_extract", run_id, t_ok)
-    n_delta = t_ok.count()
-    ckpt.write_metrics(cat, "B_extract", run_id, {
+    n_delta = ckpt.observed_count(n_triples)
+    _commit(cat, "B_extract", run_id, pending_docs.select("conv_id"), {
         "n_triples_delta": n_delta, "wall_s": time.time() - t0,
         "triples_per_sec": n_delta / max(time.time() - t0, 1e-9),
-    })
+    }, record)
     triples.unpersist()
     nodes.unpersist()
     pending_docs.unpersist()
@@ -266,27 +280,28 @@ def stage_c_canonicalize(cat: Catalog, cfg: PipelineConfig) -> DataFrame:
     incremental = (
         cfg.resume and cat.exists("candidate_nodes") and cat.exists("node_buckets")
     )
+    # run-record counts ride on the writes that produce the rows
+    n_signed = n_pairs = None
     if not incremental:
         nodes, edges = similarity_edges(
             nodes_raw,
             jaccard_threshold=cfg.jaccard_threshold,
             cosine_threshold=cfg.cosine_threshold,
         )
-        nodes = caching.track(nodes)
-        n_signed = nodes.count()
         cat.overwrite(node_bucket_rows(nodes), "node_buckets", run_id=run_id)
+        edges, n_pairs = ckpt.counted(edges)
         cat.overwrite(edges, "node_pairs", run_id=run_id)
         comps = connected_components(nodes.select("node_id"), cat.read("node_pairs"))
         cat.overwrite(comps, "components", run_id=run_id)
-        cat.overwrite(nodes, "candidate_nodes", run_id=run_id)
+        signed, n_signed = ckpt.counted(nodes)
+        cat.overwrite(signed, "candidate_nodes", run_id=run_id)
         nodes.unpersist()
+        processed = nodes_raw.select("conv_id").distinct()
     else:
         delta_raw = caching.track(ckpt.pending(cat, "C_canonicalize", nodes_raw))
+        processed = delta_raw.select("conv_id").distinct()
         old = cat.read("candidate_nodes").drop("text")
-        if delta_raw.limit(1).count() == 0:
-            n_signed = 0
-            comps = cat.read("components")
-        else:
+        if delta_raw.limit(1).count() > 0:
             delta = candidate_nodes(delta_raw)
             merged = caching.track(with_node_text(merge_candidate_nodes(old, delta)))
             # re-sign only nodes that are new or whose match-relevant
@@ -303,9 +318,9 @@ def stage_c_canonicalize(cat: Catalog, cfg: PipelineConfig) -> DataFrame:
                 )
                 .drop("o_aliases")
             )
-            n_signed = to_sign.count()
+            signed, n_signed = ckpt.counted(to_sign)
             cat.merge_upsert(
-                node_bucket_rows(to_sign), "node_buckets",
+                node_bucket_rows(signed), "node_buckets",
                 keys=["node_id", "band"], run_id=run_id,
             )
             all_buckets = cat.read("node_buckets")
@@ -314,7 +329,7 @@ def stage_c_canonicalize(cat: Catalog, cfg: PipelineConfig) -> DataFrame:
             fuzzy_new = verify_pairs(
                 cand, merged, cfg.jaccard_threshold, cfg.cosine_threshold
             )
-            edges = (
+            edges, n_pairs = ckpt.counted(
                 cat.read("node_pairs")
                 .unionByName(alias_identity_edges(merged))
                 .unionByName(fuzzy_new)
@@ -336,20 +351,18 @@ def stage_c_canonicalize(cat: Catalog, cfg: PipelineConfig) -> DataFrame:
             cat.overwrite(merged, "candidate_nodes", run_id=run_id)
             merged.unpersist()
             to_sign.unpersist()
-        ckpt.mark_processed(  # commit point (incremental path)
-            cat, "C_canonicalize", run_id, delta_raw.select("conv_id").distinct()
-        )
-        delta_raw.unpersist()
-    if not incremental:
-        ckpt.mark_processed(  # commit point (full path)
-            cat, "C_canonicalize", run_id, nodes_raw.select("conv_id").distinct()
-        )
-    n_pairs = cat.read("node_pairs").count()
-    ckpt.write_metrics(cat, "C_canonicalize", run_id, {
-        "n_candidate_pairs": n_pairs,
-        "n_signatures_computed": n_signed,
+    metrics = {
+        # nothing pending: node_pairs was not rewritten, so its rows
+        # are counted (the only count job of that no-op run)
+        "n_candidate_pairs": (ckpt.observed_count(n_pairs) if n_pairs is not None
+                              else cat.read("node_pairs").count()),
+        "n_signatures_computed": (ckpt.observed_count(n_signed)
+                                  if n_signed is not None else 0),
         "wall_s": time.time() - t0,
-    })
+    }
+    _commit(cat, "C_canonicalize", run_id, processed, metrics)
+    if incremental:
+        delta_raw.unpersist()
     return cat.read("components")
 
 
@@ -369,29 +382,25 @@ def stage_c_compact(cat: Catalog, cfg: PipelineConfig) -> None:
     if cfg.resume:
         ckpt.reconcile_versions(cat, C_TABLES)
     nodes = caching.track(cat.read("candidate_nodes"))
-    edges = edges_from_candidates(
+    edges, n_pairs = ckpt.counted(edges_from_candidates(
         nodes,
         jaccard_threshold=cfg.jaccard_threshold,
         cosine_threshold=cfg.cosine_threshold,
-    )
+    ))
     cat.overwrite(node_bucket_rows(nodes), "node_buckets", run_id=run_id)
     cat.overwrite(edges, "node_pairs", run_id=run_id)
     comps = connected_components(nodes.select("node_id"), cat.read("node_pairs"))
     cat.overwrite(comps, "components", run_id=run_id)
     # commit point: sentinel state row makes the three overwrites one
     # atomic unit for reconcile_versions
-    ckpt.mark_processed(
-        cat, "C_compact", run_id,
-        cat.spark.createDataFrame([("__all__",)], "conv_id string"),
-    )
-    ckpt.write_metrics(cat, "C_compact", run_id, {
-        "n_candidate_pairs": cat.read("node_pairs").count(),
+    _commit(cat, "C_compact", run_id, None, {
+        "n_candidate_pairs": ckpt.observed_count(n_pairs),
         "wall_s": time.time() - t0,
     })
     caching.release_caches()
 
 
-def stage_d_materialize(cat: Catalog, cfg: PipelineConfig):
+def stage_d_materialize(cat: Catalog, cfg: PipelineConfig, record: dict | None = None):
     run_id = ckpt.new_run_id()
     t0 = time.time()
     if cfg.resume:
@@ -425,22 +434,20 @@ def stage_d_materialize(cat: Catalog, cfg: PipelineConfig):
         cat.read("components"),
         docs_meta=docs_meta,
     )
-    cat.overwrite(g.nodes, "kg_nodes", run_id=run_id)
-    cat.overwrite(g.edges, "kg_edges", run_id=run_id)
+    kg_nodes, n_nodes = ckpt.counted(g.nodes)
+    kg_edges, n_edges = ckpt.counted(g.edges)
+    cat.overwrite(kg_nodes, "kg_nodes", run_id=run_id)
+    cat.overwrite(kg_edges, "kg_edges", run_id=run_id)
     cat.overwrite(g.dangling, "dangling", run_id=run_id)
+    ckpt.write_lineage(cat, "D_materialize", run_id, cat.read("kg_edges"), key="pred")
     # commit point: stage D is a pure recompute (no per-conv pending
     # set), so the state row is a sentinel marking all three overwrites
     # as one atomic unit for reconcile_versions
-    ckpt.mark_processed(
-        cat, "D_materialize", run_id,
-        cat.spark.createDataFrame([("__all__",)], "conv_id string"),
-    )
-    ckpt.write_lineage(cat, "D_materialize", run_id, cat.read("kg_edges"), key="pred")
-    ckpt.write_metrics(cat, "D_materialize", run_id, {
-        "n_kg_nodes": cat.read("kg_nodes").count(),
-        "n_kg_edges": cat.read("kg_edges").count(),
+    _commit(cat, "D_materialize", run_id, None, {
+        "n_kg_nodes": ckpt.observed_count(n_nodes),
+        "n_kg_edges": ckpt.observed_count(n_edges),
         "wall_s": time.time() - t0,
-    })
+    }, record)
     return g
 
 
@@ -526,16 +533,16 @@ def stage_e_analytics(cat: Catalog, cfg: PipelineConfig):
             .cast("long").alias("community"),
         )
     )
+    metrics, n_scored = ckpt.counted(metrics)
     cat.overwrite(metrics, "kg_node_metrics", run_id=run_id)
     # edge-level metrics: per-pair triangle support (|N(a) ∩ N(b)|) —
     # the corroboration count behind the node-level triangle numbers;
     # the Cypher export carries it as r.support so loaders can filter
     # to triangle-corroborated relations (the 3-truss) client-side
     supp, temps = _edge_support(edges)
-    cat.overwrite(
-        supp.select("a", "b", F.col("support").cast("long").alias("support")),
-        "kg_edge_metrics", run_id=run_id,
-    )
+    supp, n_pairs = ckpt.counted(
+        supp.select("a", "b", F.col("support").cast("long").alias("support")))
+    cat.overwrite(supp, "kg_edge_metrics", run_id=run_id)
     for t in temps:
         t.unpersist()
     # partition-quality scalar for the run record: exact-integer
@@ -546,13 +553,9 @@ def stage_e_analytics(cat: Catalog, cfg: PipelineConfig):
     q = modularity(
         edges, comm.select("node", F.col("community").alias("label"))
     ).collect()[0]["modularity"]
-    ckpt.mark_processed(
-        cat, "E_analytics", run_id,
-        cat.spark.createDataFrame([("__all__",)], "conv_id string"),
-    )
-    ckpt.write_metrics(cat, "E_analytics", run_id, {
-        "n_nodes_scored": cat.read("kg_node_metrics").count(),
-        "n_edges_scored": cat.read("kg_edge_metrics").count(),
+    _commit(cat, "E_analytics", run_id, None, {
+        "n_nodes_scored": ckpt.observed_count(n_scored),
+        "n_edges_scored": ckpt.observed_count(n_pairs),
         "modularity_q": float(q),
         "wall_s": time.time() - t0,
     })
@@ -567,28 +570,7 @@ def run_pipeline(
     cat = make_catalog(spark, warehouse, backend=cfg.catalog_backend)
     t0 = time.time()
     stage_a_reassemble(cat, transcripts, cfg)
-    stage_b_extract(cat, cfg)
-    stage_c_canonicalize(cat, cfg)
-    stage_d_materialize(cat, cfg)
-    if cfg.analytics:
-        stage_e_analytics(cat, cfg)
-    # table maintenance: bound manifest growth on the append-heavy
-    # bookkeeping tables (amortized — fires once per ~64 commits);
-    # vacuum reclaims the superseded commit dirs past a 4-version
-    # time-travel horizon
-    for t in (ckpt.STATE, ckpt.LINEAGE, ckpt.METRICS):
-        if cat.maybe_compact(t):
-            cat.vacuum(t, keep_versions=4)
-    caching.release_caches()  # reclaim operator-tracked intermediates
-    wall = time.time() - t0
-    n_triples = cat.read("triples_raw").count()
-    return {
-        "wall_s": wall,
-        "n_triples": n_triples,
-        "triples_per_sec": n_triples / wall,
-        "n_kg_nodes": cat.read("kg_nodes").count(),
-        "n_kg_edges": cat.read("kg_edges").count(),
-    }
+    return _run_bcd_and_stats(cat, cfg, t0)
 
 
 def run_pipeline_pdfs(
@@ -669,23 +651,37 @@ def run_pipeline_pdfs(
 def _run_bcd_and_stats(cat: Catalog, cfg: PipelineConfig, t0: float) -> dict:
     """Shared tail of every batch runner: stages B-D, bookkeeping
     compaction, cache release, run stats."""
-    stage_b_extract(cat, cfg)
+    record: dict = {}
+    stage_b_extract(cat, cfg, record=record)
     stage_c_canonicalize(cat, cfg)
-    stage_d_materialize(cat, cfg)
+    stage_d_materialize(cat, cfg, record=record)
     if cfg.analytics:
         stage_e_analytics(cat, cfg)
+    # table maintenance: bound manifest growth on the append-heavy
+    # bookkeeping tables (amortized — fires once per ~64 commits);
+    # vacuum reclaims the superseded commit dirs past a 4-version
+    # time-travel horizon
     for t in (ckpt.STATE, ckpt.LINEAGE, ckpt.METRICS):
         if cat.maybe_compact(t):
             cat.vacuum(t, keep_versions=4)
-    caching.release_caches()
-    wall = time.time() - t0
+    caching.release_caches()  # reclaim operator-tracked intermediates
+    return _run_stats(cat, time.time() - t0, record)
+
+
+def _run_stats(cat: Catalog, wall: float, record: dict, n_before: int = 0) -> dict:
+    """A runner's result: ``n_triples`` is the triples_raw total and
+    ``triples_per_sec`` this run's own rate — the triples stage B
+    observed it adding (else the table's growth past ``n_before``)
+    over its wall; the kg counts are those stage D observed on its
+    writes, counted only when this run did not reach stage D."""
     n_triples = cat.read("triples_raw").count()
+    b, d = record.get("B_extract"), record.get("D_materialize")
     return {
         "wall_s": wall,
         "n_triples": n_triples,
-        "triples_per_sec": n_triples / wall,
-        "n_kg_nodes": cat.read("kg_nodes").count(),
-        "n_kg_edges": cat.read("kg_edges").count(),
+        "triples_per_sec": (b["n_triples_delta"] if b else n_triples - n_before) / wall,
+        "n_kg_nodes": d["n_kg_nodes"] if d else cat.read("kg_nodes").count(),
+        "n_kg_edges": d["n_kg_edges"] if d else cat.read("kg_edges").count(),
     }
 
 
@@ -709,26 +705,24 @@ def run_pipeline_ard(
     return _run_bcd_and_stats(cat, cfg, t0)
 
 
+def _n_triples(cat: Catalog) -> int:
+    return cat.read("triples_raw").count() if cat.exists("triples_raw") else 0
+
+
 def _finish_stream_and_stats(cat: Catalog, cfg: PipelineConfig, t0: float,
-                             state: dict) -> dict:
+                             state: dict, n_before: int) -> dict:
     """Shared tail of every streaming runner: C/D catch-up when the
     final micro-batches missed the in-stream trigger boundary, cache
-    release, run stats."""
+    release, run stats (the stream's triple delta is the table's growth
+    past ``n_before``)."""
+    record: dict = {}
     if not state.get("cd_on_last"):
         stage_c_canonicalize(cat, cfg)
-        stage_d_materialize(cat, cfg)
+        stage_d_materialize(cat, cfg, record=record)
     if cfg.analytics:
         stage_e_analytics(cat, cfg)
     caching.release_caches()
-    wall = time.time() - t0
-    n_triples = cat.read("triples_raw").count()
-    return {
-        "wall_s": wall,
-        "n_triples": n_triples,
-        "triples_per_sec": n_triples / wall,
-        "n_kg_nodes": cat.read("kg_nodes").count(),
-        "n_kg_edges": cat.read("kg_edges").count(),
-    }
+    return _run_stats(cat, time.time() - t0, record, n_before)
 
 
 def run_pipeline_streaming(
@@ -754,13 +748,14 @@ def run_pipeline_streaming(
     cfg = PipelineConfig(warehouse=warehouse, **kwargs)
     cat = make_catalog(spark, warehouse, backend=cfg.catalog_backend)
     t0 = time.time()
+    n_before = _n_triples(cat)
     state = stream_pipeline_to_catalog(
         spark, source_path, cat,
         checkpoint_path=os.path.join(warehouse, "_stream_ckpt"),
         extract_engine=cfg.extract_engine, salt_segment=cfg.salt_segment,
         cd_every=cd_every, cd_cfg=cfg,
     )
-    return _finish_stream_and_stats(cat, cfg, t0, state)
+    return _finish_stream_and_stats(cat, cfg, t0, state, n_before)
 
 
 def run_pipeline_pdfs_streaming(
@@ -779,13 +774,14 @@ def run_pipeline_pdfs_streaming(
     cfg = PipelineConfig(warehouse=warehouse, **kwargs)
     cat = make_catalog(spark, warehouse, backend=cfg.catalog_backend)
     t0 = time.time()
+    n_before = _n_triples(cat)
     state = stream_pdf_pipeline_to_catalog(
         spark, pdf_dir, cat,
         checkpoint_path=os.path.join(warehouse, "_stream_ckpt"),
         glob=glob, extract_engine=cfg.extract_engine,
         cd_every=cd_every, cd_cfg=cfg,
     )
-    return _finish_stream_and_stats(cat, cfg, t0, state)
+    return _finish_stream_and_stats(cat, cfg, t0, state, n_before)
 
 
 def run_pipeline_ard_streaming(
@@ -802,13 +798,14 @@ def run_pipeline_ard_streaming(
     cfg = PipelineConfig(warehouse=warehouse, **kwargs)
     cat = make_catalog(spark, warehouse, backend=cfg.catalog_backend)
     t0 = time.time()
+    n_before = _n_triples(cat)
     state = stream_ard_pipeline_to_catalog(
         spark, path, cat,
         checkpoint_path=os.path.join(warehouse, "_stream_ckpt"),
         extract_engine=cfg.extract_engine,
         cd_every=cd_every, cd_cfg=cfg,
     )
-    return _finish_stream_and_stats(cat, cfg, t0, state)
+    return _finish_stream_and_stats(cat, cfg, t0, state, n_before)
 
 
 def main() -> None:

@@ -23,6 +23,7 @@ against either catalog backend.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from .. import checkpoint as ckpt
 from ..operators.reassembly import reassemble
@@ -50,8 +51,8 @@ def exactly_once_append(
         catalog,
         f"stream_{table}",
         run_id,
-        batch_df.sparkSession.createDataFrame(
-            [(f"batch:{batch_id}",)], "conv_id string"
+        batch_df.sparkSession.range(1).select(
+            F.lit(f"batch:{batch_id}").alias("conv_id")
         ),
     )
     return "appended"
@@ -145,8 +146,6 @@ def _commit_ab_docs(
     routing, edges_agg merge, then the single atomic commit point.
     Caller has already done the run_id dedup check and torn-batch
     healing."""
-    from pyspark.sql import functions as F
-
     from ..functions import caching
     from ..operators.extraction import extract_nodes, extract_triples
     from ..operators.materialize import aggregate_raw_edges, edge_agg_combiner
@@ -195,7 +194,7 @@ def _commit_ab_docs(
             F.lit(run_id).alias("run_id"),
         )
     )
-    catalog.append(state_rows, ckpt.STATE)
+    catalog.append(state_rows, ckpt.STATE, run_id=run_id)
     caching.release_caches()
     return "appended"
 
@@ -286,8 +285,6 @@ def _process_pdf_batch(
     (plans/pipeline.py stage_a_ingest_documents): same undecodable-
     document quarantine reason, same /Info provenance columns, same
     atomic run_id commit."""
-    from pyspark.sql import functions as F
-
     from ..operators.pdf import decode_pdf_text
     from ..sources.raw_files import file_stem
 
@@ -314,8 +311,6 @@ def _process_preassembled_batch(
     the same helper batch stage A uses (byte-identical rows between
     stream and batch), split usable vs quarantine with the source's
     classified reason, commit atomically."""
-    from pyspark.sql import functions as F
-
     from ..plans.pipeline import normalize_preassembled
 
     run_id = f"{stream_id}-b{batch_id}"
@@ -430,8 +425,6 @@ def stream_ard_pipeline_to_catalog(
     under the same exactly-once contract as the PDF/transcript
     streams, with the cd_every in-stream C+D trigger.  Articles are
     whole rows, so nothing straddles batches."""
-    from pyspark.sql import functions as F
-
     from ..sources.ard import ARD_SCHEMA, ard_as_documents
 
     _require_checkpoint(checkpoint_path)

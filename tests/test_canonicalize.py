@@ -7,11 +7,12 @@ from aisafetyintervention_literatureextraction_spark.datagen import GOLDEN_NODES
 from aisafetyintervention_literatureextraction_spark.functions.text import node_text
 from aisafetyintervention_literatureextraction_spark.ontology import CANONICAL_ALIASES
 from aisafetyintervention_literatureextraction_spark.operators.canonicalize import (
+    _feature_tokens,
+    bucket_join_pairs,
     candidate_nodes,
-    lsh_candidate_pairs,
-    scored_pairs,
+    node_bucket_rows,
     similarity_edges,
-    tfidf_cosine,
+    verify_pairs,
     with_node_text,
 )
 from aisafetyintervention_literatureextraction_spark.operators.components import (
@@ -71,26 +72,70 @@ def test_alias_clusters_merge(spark, corpus):
     assert len(set(golden_cids)) == len(golden_cids), "golden nodes over-merged"
 
 
+def _node_tokens(nodes):
+    return {
+        r["node_id"]: (r["type"], set(r["tokens"]))
+        for r in _feature_tokens(nodes).select("node_id", "type", "tokens").collect()
+    }
+
+
 def test_lsh_recall_vs_exact(spark, corpus):
     """Blocking recall: every pair passing the final threshold is found
-    by LSH (compare against exact all-pairs on this small corpus)."""
+    by the shipped LSH candidate path (compare against exact all-pairs
+    Jaccard on this small corpus)."""
     nr = _nodes_raw(spark, corpus)
     nodes = with_node_text(candidate_nodes(nr)).persist()
-    lsh = scored_pairs(lsh_candidate_pairs(nodes))
-    # exact all-pairs via cross join (test-only, small n)
-    from aisafetyintervention_literatureextraction_spark.operators.canonicalize import (
-        _feature_tokens,
-    )
-    f = _feature_tokens(nodes).select("node_id", "tokens")
-    a = f.select(F.col("node_id").alias("a_id"), F.col("tokens").alias("a_tokens"))
-    b = f.select(F.col("node_id").alias("b_id"), F.col("tokens").alias("b_tokens"))
-    exact = scored_pairs(
-        a.crossJoin(b).filter(F.col("a_id") < F.col("b_id"))
-    ).filter(F.col("jaccard") >= 0.6)
-    exact_pairs = set(map(tuple, exact.select("a_id", "b_id").collect()))
-    lsh_pairs = set(map(tuple, lsh.select("a_id", "b_id").collect()))
+    buckets = node_bucket_rows(nodes)
+    lsh_pairs = set(map(tuple, bucket_join_pairs(buckets, buckets).collect()))
+    toks = sorted(_node_tokens(nodes).items())
+    exact_pairs = {
+        (a, b)
+        for i, (a, (_, ta)) in enumerate(toks)
+        for b, (_, tb) in toks[i + 1:]
+        if len(ta & tb) / max(len(ta | tb), 1) >= 0.6
+    }
+    nodes.unpersist()
     missed = exact_pairs - lsh_pairs
     assert not missed, f"LSH missed {len(missed)} true pairs"
+
+
+def test_verify_pairs_matches_python_reference(spark, corpus):
+    """The one-pass scorer equals a plain-Python Jaccard + binary-TF
+    TF-IDF cosine (idf = ln((n+1)/(df+1)) + 1 over all candidate
+    nodes) on the fixture corpus's LSH candidate pairs."""
+    import math
+
+    nr = _nodes_raw(spark, corpus)
+    nodes = with_node_text(candidate_nodes(nr)).persist()
+    buckets = node_bucket_rows(nodes)
+    cand = bucket_join_pairs(buckets, buckets).persist()
+    jt, ct = 0.5, 0.6
+    got = sorted(
+        (r["a_id"], r["b_id"], round(r["similarity"], 6))
+        for r in verify_pairs(cand, nodes, jt, ct).collect()
+    )
+
+    toks = _node_tokens(nodes)
+    n_docs = nodes.count()
+    df = {}
+    for _, ts in toks.values():
+        for t in ts:
+            df[t] = df.get(t, 0) + 1
+    idf = {t: math.log((n_docs + 1.0) / (d + 1.0)) + 1.0 for t, d in df.items()}
+    norm = {k: math.sqrt(sum(idf[t] ** 2 for t in ts)) for k, (_, ts) in toks.items()}
+    want = []
+    for a, b in cand.collect():
+        (ta_type, ta), (tb_type, tb) = toks[a], toks[b]
+        if ta_type != tb_type:
+            continue
+        jac = len(ta & tb) / max(len(ta | tb), 1)
+        cos = sum(idf[t] ** 2 for t in ta & tb) / (norm[a] * norm[b])
+        if jac >= jt and cos >= ct:
+            want.append((a, b, round(max(jac, cos), 6)))
+    cand.unpersist()
+    nodes.unpersist()
+    assert want, "fixture corpus yields no fuzzy merge pairs"
+    assert got == sorted(want)
 
 
 def test_candidate_nodes_lww(spark):

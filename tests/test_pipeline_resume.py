@@ -2,6 +2,7 @@
 without recomputation; F1 anti-join checkpoint pattern)."""
 
 import pyspark.sql.functions as F
+import pytest
 
 from aisafetyintervention_literatureextraction_spark import checkpoint as ckpt
 from aisafetyintervention_literatureextraction_spark.catalog import Catalog
@@ -250,3 +251,86 @@ def test_stage_d_crash_rolls_back_torn_graph(spark, corpus, warehouse):
     m = cat._manifest("kg_nodes")
     assert m["run_id"] is not None
     assert m["run_id"] in ckpt.committed_run_ids(cat)
+
+
+def test_crash_between_record_and_commit_keeps_one_metrics_set(
+        spark, warehouse, monkeypatch):
+    """A run killed after its lineage/metrics landed but before its
+    commit point: resume prunes the orphan record, so the warehouse
+    holds exactly one metrics set per committed run_id and none for
+    the killed run."""
+    from aisafetyintervention_literatureextraction_spark.datagen import corpus_df
+    from aisafetyintervention_literatureextraction_spark.plans.pipeline import (
+        PipelineConfig,
+        stage_a_reassemble,
+        stage_b_extract,
+    )
+
+    df, _ = corpus_df(spark, n_convs=3, hot_conv_turns=20)
+    cat = Catalog(spark, warehouse)
+    cfg = PipelineConfig(warehouse=warehouse)
+    stage_a_reassemble(cat, df, cfg)
+
+    killed = []
+    real_mark = ckpt.mark_processed
+
+    def crash_at_b(catalog, stage, run_id, *a, **kw):
+        if stage == "B_extract":
+            killed.append(run_id)
+            raise RuntimeError("killed before the commit point")
+        return real_mark(catalog, stage, run_id, *a, **kw)
+
+    monkeypatch.setattr(ckpt, "mark_processed", crash_at_b)
+    with pytest.raises(RuntimeError, match="killed"):
+        stage_b_extract(cat, cfg)
+    monkeypatch.setattr(ckpt, "mark_processed", real_mark)
+    met = cat.read(ckpt.METRICS)
+    assert met.filter(F.col("run_id") == killed[0]).count() > 0  # record landed
+
+    # resume: A has nothing pending (a committed no-op run), B redoes
+    stage_a_reassemble(cat, df, cfg)
+    stage_b_extract(cat, cfg)
+
+    committed = ckpt.committed_run_ids(cat)
+    rows = [(r["run_id"], r["metric"]) for r in cat.read(ckpt.METRICS).collect()]
+    assert killed[0] not in {rid for rid, _ in rows}
+    assert {rid for rid, _ in rows} <= committed
+    assert len(rows) == len(set(rows)), "a run_id holds two metrics sets"
+    lineage_runs = {r["run_id"] for r in cat.read(ckpt.LINEAGE).collect()}
+    assert killed[0] not in lineage_runs and lineage_runs <= committed
+    by_stage = {}
+    for r in cat.read(ckpt.METRICS).filter(F.col("metric") == "wall_s").collect():
+        by_stage.setdefault(r["stage"], []).append(r["run_id"])
+    assert len(by_stage["A_reassemble"]) == 2 and len(by_stage["B_extract"]) == 1
+    n_delta = cat.read(ckpt.METRICS).filter(
+        (F.col("stage") == "B_extract") & (F.col("metric") == "n_triples_delta")
+    ).collect()[0]["value"]
+    assert int(n_delta) == cat.read("triples_raw").count() > 0
+
+
+# Spark jobs one cold run_pipeline build of the 3-conversation corpus
+# runs (test session: 8 cores, 8 shuffle partitions). A new job that
+# exists only for bookkeeping or metrics shows up here first.
+BUILD_JOB_BUDGET = 92
+
+
+def test_build_job_budget(spark, warehouse):
+    """Every Spark job a build runs must produce an output: the total
+    stays at or below the budget measured when the metric-only jobs
+    were removed (counts, table re-reads, state-table scans)."""
+    from aisafetyintervention_literatureextraction_spark.datagen import corpus_df
+
+    df, _ = corpus_df(spark, n_convs=3, hot_conv_turns=20)
+    df = df.persist()
+    df.count()
+    sc = spark.sparkContext
+    group = f"job-budget-{warehouse}"
+    sc.setJobGroup(group, "run_pipeline job budget")
+    try:
+        stats = run_pipeline(spark, df, warehouse)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        df.unpersist()
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert stats["n_kg_nodes"] > 0
+    assert n_jobs <= BUILD_JOB_BUDGET, f"build ran {n_jobs} Spark jobs"
